@@ -10,6 +10,9 @@ so Catalyst gets predicate pushdown + column pruning for free.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -249,16 +252,18 @@ def compact_parquet(
     rebalance when shrinking, which preserves existing within-file
     order.
 
-    The rewrite stages into a sibling directory and swaps via two
-    renames — readers racing the swap see either the old or the new
-    complete table, never a mix. (A lakehouse table format does this
-    transactionally; this is the format-free equivalent for plain
-    parquet directories.)
+    The rewrite stages into a sibling directory and swaps it in
+    (:func:`swap_dir`). After a crash, the next compaction from the
+    single driver (or any caller of :func:`recover_dir`) rolls an
+    interrupted swap forward or cleans it up; a plain read between
+    the crash and that call can find no table. Readers in another
+    process during the swap are not supported. (A lakehouse table
+    format does this transactionally; this is the format-free
+    equivalent for plain parquet directories.)
     """
     import math
-    import shutil
-    import uuid
 
+    recover_dir(path)
     df = spark.read.parquet(path)
     total = sum(
         os.path.getsize(os.path.join(dirpath, f))
@@ -273,13 +278,58 @@ def compact_parquet(
         ).sortWithinPartitions(*preserve_clustering)
     else:
         out = df.coalesce(n_files)
-    staged = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    out.write.parquet(staged)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old)
+    swap_dir(path, lambda staged: out.write.parquet(staged))
     return n_files
+
+
+def swap_dir(path: str, write: Callable[[str], None]) -> None:
+    """Replace directory ``path`` with a freshly written copy.
+
+    ``write(staged)`` fills the sibling ``<path>__compact_<id>`` with
+    a Spark write, whose ``_SUCCESS`` marker proves it complete; then
+    ``path`` is renamed to ``<path>__old_<id>``, the staged copy is
+    renamed to ``path``, and the old copy is deleted. A crash between
+    the two renames leaves no ``path``; :func:`recover_dir` rolls
+    that forward on the next access."""
+    tag = uuid.uuid4().hex[:8]
+    staged, old = f"{path}__compact_{tag}", f"{path}__old_{tag}"
+    write(staged)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(staged, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def recover_dir(path: str) -> None:
+    """Finish or clean up an interrupted :func:`swap_dir` of ``path``.
+
+    If ``path`` is missing and a ``__compact_*`` sibling holds its
+    ``_SUCCESS`` marker, that sibling is renamed in. Then, once
+    ``path`` exists, leftover ``__old_*`` and ``__compact_*`` siblings
+    are deleted. A directory listing only — no Spark job."""
+    parent, name = os.path.split(path.rstrip("/"))
+    try:
+        siblings = [
+            os.path.join(parent, n)
+            for n in os.listdir(parent)
+            if n.startswith((f"{name}__compact_", f"{name}__old_"))
+        ]
+    except FileNotFoundError:
+        return
+    if not siblings:
+        return
+    if not os.path.isdir(path):
+        done = [
+            s
+            for s in siblings
+            if "__compact_" in os.path.basename(s)
+            and os.path.exists(os.path.join(s, "_SUCCESS"))
+        ]
+        if not done:
+            return
+        os.rename(done[0], path)
+    for s in siblings:
+        shutil.rmtree(s, ignore_errors=True)
 
 
 def load_file(

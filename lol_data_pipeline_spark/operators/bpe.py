@@ -40,6 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lol_data_pipeline_spark.io import load_table
+from lol_data_pipeline_spark.operators.artifact import BPE
+
 SEP = "·"  # '·' — outside the [a-z]+ word alphabet by construction
 
 
@@ -185,9 +188,6 @@ def bpe_encode_docs(
 # can flip under new data), so staleness => rebuild, by design.
 # ---------------------------------------------------------------------------
 
-_BPE_META_NAME = "_bpe_meta.json"
-
-
 def ensure_bpe_vocab(
     spark,
     sf_dir: str,
@@ -195,49 +195,25 @@ def ensure_bpe_vocab(
     root: str | None = None,
     variant: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale tokenizer artifact: the ordered merge
-    list + params + source fingerprint in one JSON sidecar. Returns
-    (path, meta); meta["merges"] is the same [(round, l, r, merged,
-    cnt)] list bpe_train returns, JSON round-tripped."""
-    import json
-    import os
+    """Build-if-absent-or-stale tokenizer artifact
+    (operators/artifact.py): the ordered merge list + params + source
+    fingerprint in one JSON sidecar. Returns (path, meta);
+    meta["merges"] is the same [(round, l, r, merged, cnt)] list
+    bpe_train returns, JSON round-tripped."""
+    params = {"rounds": rounds}
 
-    from lol_data_pipeline_spark.io import load_table
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
+    def build(path: str) -> dict:
+        merges = bpe_train(load_table(spark, sf_dir, "documents"), rounds=rounds)
+        return BPE.commit(
+            path,
+            BPE.stamp(
+                sf_dir,
+                params,
+                merges=[[i, l, r, m, c] for (i, l, r, m, c) in merges],
+            ),
+        )
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = root or os.environ.get(
-        "SPARK_GRAFT_BPE_VOCAB_DIR",
-        os.path.join(repo_root, "spark-warehouse", "bpe_vocab"),
-    )
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"bpe_{name}")
-    meta_path = os.path.join(path, _BPE_META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"rounds": rounds}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    merges = bpe_train(load_table(spark, sf_dir, "documents"), rounds=rounds)
-    meta = {
-        "fingerprint": want_fp,
-        "params": want_params,
-        "merges": [[i, l, r, m, c] for (i, l, r, m, c) in merges],
-    }
-    os.makedirs(path, exist_ok=True)
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    return path, meta
+    return BPE.ensure(sf_dir, params, build, root, variant)
 
 
 def vocab_merges(meta: dict) -> list[tuple[int, str, str, str, int]]:

@@ -41,42 +41,25 @@ contract, exact-substring axis.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.functions.scalar import md5_long
-from lol_data_pipeline_spark.io import load_table, write_overwrite
+from lol_data_pipeline_spark.io import load_table
+from lol_data_pipeline_spark.operators.artifact import CHUNK, CHUNKS, NGRAM, NGRAMS
 from lol_data_pipeline_spark.operators.dedup import doc_chunks
 from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
+    artifact_delete,
+    artifact_upsert,
+    lsm_commit,
+    lsm_rebuild,
     lsm_view,
 )
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-CHUNK_ROOT = os.environ.get(
-    "SPARK_GRAFT_CHUNK_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "chunk_index"),
-)
-_META_NAME = "_chunk_meta.json"
+CHUNK_ROOT = CHUNK.root
 N_BUCKETS = 16  # constant partition count — the maintenance unit
 
-
-def chunks_path(path: str) -> str:
-    return os.path.join(path, "chunks")
-
-
-CHUNKS_DDL = "id long, chunk_idx int, h long, hb int"
-NGRAM_DDL = "id long, h long, hb int"
-# one source of truth per family: lsm_view's declared read schema AND
-# the empty fallback (r14 ADVICE)
+chunks_path = CHUNKS.dir  # the n-gram artifact keeps its rows in the same subdirectory
 
 
 def read_chunk_rows(spark: SparkSession, path: str) -> DataFrame:
@@ -84,25 +67,13 @@ def read_chunk_rows(spark: SparkSession, path: str) -> DataFrame:
     LSM view (plain base scan when the log is empty). Empty-with-
     schema when nothing is on disk, so probe/upsert-after-full-
     take-down works (r13 ADVICE)."""
-    view = lsm_view(
-        spark, chunks_path(path), "id", schema=CHUNKS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], CHUNKS_DDL)
-    return view.select(
-        "id", "chunk_idx", "h", F.col("hb").cast("int").alias("hb")
-    )
+    return lsm_view(spark, chunks_path(path), CHUNKS)
 
 
 def read_ngram_rows(spark: SparkSession, path: str) -> DataFrame:
     """The n-gram artifact's logical (id, h, hb) rows — same contract
     as read_chunk_rows for the decontamination index."""
-    view = lsm_view(
-        spark, chunks_path(path), "id", schema=NGRAM_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], NGRAM_DDL)
-    return view.select("id", "h", F.col("hb").cast("int").alias("hb"))
+    return lsm_view(spark, NGRAMS.dir(path), NGRAMS)
 
 
 def _batch_chunk_rows(docs: DataFrame, c: int) -> DataFrame:
@@ -116,6 +87,10 @@ def _batch_chunk_rows(docs: DataFrame, c: int) -> DataFrame:
     ).withColumn("hb", F.pmod(F.col("h"), F.lit(N_BUCKETS)).cast("int"))
 
 
+def _chunk_params(c: int, index_where: str) -> dict:
+    return {"c": c, "nb": N_BUCKETS, "index_where": index_where}
+
+
 def build_chunk_index(
     spark: SparkSession,
     sf_dir: str,
@@ -127,10 +102,6 @@ def build_chunk_index(
     partitioned chunk rows, h-sorted within files, + sidecar.
     ``index_where`` (SQL over documents) selects the index side —
     '' means the whole corpus."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -139,22 +110,10 @@ def build_chunk_index(
         .repartition("hb")
         .sortWithinPartitions("h")
     )
-    write_overwrite(rows, chunks_path(path), partition_by=["hb"])
-    lsm_reset(chunks_path(path))  # a rebuild starts a fresh generation
-    disk = spark.read.parquet(chunks_path(path))
-    agg = disk.agg(
-        F.count("*").alias("n_chunks"),
-        F.countDistinct("id").alias("n_docs"),
-    ).collect()[0]
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
-        "params": {"c": c, "nb": N_BUCKETS, "index_where": index_where},
-        "n_docs": int(agg.n_docs),
-        "n_chunks": int(agg.n_chunks),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    lsm_rebuild(rows, chunks_path(path), CHUNKS)
+    return lsm_commit(
+        spark, CHUNK, path, CHUNK.stamp(sf_dir, _chunk_params(c, index_where))
+    )
 
 
 def ensure_chunk_index(
@@ -165,31 +124,18 @@ def ensure_chunk_index(
     c: int = 8,
     index_where: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract),
-    keyed by corpus basename + optional variant; params + predicate
-    are part of the staleness check."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale (operators/artifact.py), keyed by
+    corpus basename + optional variant; params + predicate are part
+    of the staleness check."""
+    return CHUNK.ensure(
+        sf_dir,
+        _chunk_params(c, index_where),
+        lambda path: build_chunk_index(
+            spark, sf_dir, path, c=c, index_where=index_where
+        ),
+        root,
+        variant,
     )
-
-    root = root or CHUNK_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"chunk_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"c": c, "nb": N_BUCKETS, "index_where": index_where}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_chunk_index(spark, sf_dir, path, c=c, index_where=index_where)
-    return path, meta
 
 
 def served_chunk_clean(
@@ -258,20 +204,9 @@ def chunk_index_upsert(
         .join(F.broadcast(batch_ids), "id")
         .count()
     )  # bounded collect: one count (column-pruned id scan)
-    lsm_upsert(spark, chunks_path(path), rows, "id", ["hb"])
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
+    return artifact_upsert(
+        spark, CHUNK, path, meta, [rows], replaced_last_upsert=int(replaced)
     )
-    disk = read_chunk_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_chunks"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_chunks"] = int(agg.n_docs), int(agg.n_chunks)
-    meta["replaced_last_upsert"] = int(replaced)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
 
 
 def chunk_index_delete(
@@ -283,21 +218,9 @@ def chunk_index_delete(
     table stays readable (base + tombstones keep their parquet
     footers), so upsert-after-full-delete works (r13 ADVICE).
     Idempotent."""
-    ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
-    lsm_delete(spark, chunks_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
+    return artifact_delete(
+        spark, CHUNK, path, meta, doomed_ids.select(F.col("doc_id").alias("id"))
     )
-    disk = read_chunk_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_chunks"),
-        F.countDistinct("id").alias("n_docs"),
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_chunks"] = int(agg.n_docs), int(agg.n_chunks)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
 
 
 def _batch_ngram_rows(docs: DataFrame, n: int) -> DataFrame:
@@ -318,6 +241,10 @@ def _batch_ngram_rows(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
+def _ngram_params(n: int, index_where: str) -> dict:
+    return {"n": n, "nb": N_BUCKETS, "index_where": index_where}
+
+
 def build_ngram_index(
     spark: SparkSession,
     sf_dir: str,
@@ -330,10 +257,6 @@ def build_ngram_index(
     TRAINING side goes at rest here: benchmarks change, the corpus is
     static, so contamination checks against a new benchmark must not
     re-shingle 100 TB."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -342,21 +265,10 @@ def build_ngram_index(
         .repartition("hb")
         .sortWithinPartitions("h")
     )
-    write_overwrite(rows, chunks_path(path), partition_by=["hb"])
-    lsm_reset(chunks_path(path))  # a rebuild starts a fresh generation
-    disk = spark.read.parquet(chunks_path(path))
-    agg = disk.agg(
-        F.count("*").alias("n_grams"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
-        "params": {"n": n, "nb": N_BUCKETS, "index_where": index_where},
-        "n_docs": int(agg.n_docs),
-        "n_grams": int(agg.n_grams),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    lsm_rebuild(rows, NGRAMS.dir(path), NGRAMS)
+    return lsm_commit(
+        spark, NGRAM, path, NGRAM.stamp(sf_dir, _ngram_params(n, index_where))
+    )
 
 
 def ensure_ngram_index(
@@ -367,31 +279,18 @@ def ensure_ngram_index(
     n: int = 5,
     index_where: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale for the n-gram artifact (the
-    ensure_* contract; own path family so a chunk index and an n-gram
-    index over the same corpus coexist)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale for the n-gram artifact (own path
+    family, so a chunk index and an n-gram index over the same corpus
+    coexist)."""
+    return NGRAM.ensure(
+        sf_dir,
+        _ngram_params(n, index_where),
+        lambda path: build_ngram_index(
+            spark, sf_dir, path, n=n, index_where=index_where
+        ),
+        root,
+        variant,
     )
-
-    root = root or CHUNK_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"ngram_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"n": n, "nb": N_BUCKETS, "index_where": index_where}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_ngram_index(spark, sf_dir, path, n=n, index_where=index_where)
-    return path, meta
 
 
 def served_contamination(
@@ -448,20 +347,9 @@ def ngram_index_upsert(
         .distinct()
         .count()
     )  # bounded collect: one count (column-pruned id scan)
-    lsm_upsert(spark, chunks_path(path), rows, "id", ["hb"])
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
+    return artifact_upsert(
+        spark, NGRAM, path, meta, [rows], replaced_last_upsert=int(replaced)
     )
-    disk = read_ngram_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_grams"), F.countDistinct("id").alias("n_docs")
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_grams"] = int(agg.n_docs), int(agg.n_grams)
-    meta["replaced_last_upsert"] = int(replaced)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
 
 
 def ngram_index_delete(
@@ -472,18 +360,6 @@ def ngram_index_delete(
     the VIEW immediately, from disk at the next compact; the sidecar
     counts shrink exactly, and a fully-emptied table stays readable.
     Idempotent."""
-    ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
-    lsm_delete(spark, chunks_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, chunks_path(path), "id", ["hb"], sort_within=["h"]
+    return artifact_delete(
+        spark, NGRAM, path, meta, doomed_ids.select(F.col("doc_id").alias("id"))
     )
-    disk = read_ngram_rows(spark, path)
-    agg = disk.agg(
-        F.count("*").alias("n_grams"),
-        F.countDistinct("id").alias("n_docs"),
-    ).collect()[0]
-    meta = dict(meta)
-    meta["n_docs"], meta["n_grams"] = int(agg.n_docs), int(agg.n_grams)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta

@@ -54,8 +54,6 @@ this is the same build-once/serve-many contract for the graph family.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import shutil
 
@@ -68,23 +66,17 @@ from lol_data_pipeline_spark.io import (
     write_overwrite,
     write_upsert_partitions,
 )
+from lol_data_pipeline_spark.operators.artifact import GRAPH, NODES
 from lol_data_pipeline_spark.operators.lsm import (
     lsm_delete,
     lsm_maybe_compact,
-    lsm_reset,
+    lsm_rebuild,
     lsm_upsert,
     lsm_view,
 )
 from lol_data_pipeline_spark.operators.similarity import dot, with_norm
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-GRAPH_ROOT = os.environ.get(
-    "SPARK_GRAFT_GRAPH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "graph_index"),
-)
-_META_NAME = "_graph_meta.json"
+GRAPH_ROOT = GRAPH.root
 
 
 def assign_codes(
@@ -159,16 +151,7 @@ def bucket_edges(nodes: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint as fp,
-    )
-
-    return fp(sf_dir, table)
-
-
-def nodes_path(path: str) -> str:
-    return os.path.join(path, "nodes")
+nodes_path = NODES.dir
 
 
 def edges_path(path: str) -> str:
@@ -196,21 +179,14 @@ def build_knn_graph_index(
         .collect()
     )
     planes = [[float(v) for v in r.p] for r in plane_rows]
-    nodes = assign_codes(emb, planes)
-    write_overwrite(nodes, nodes_path(path), partition_by=["code"])
-    lsm_reset(nodes_path(path))  # a rebuild starts a fresh generation
-    stored = spark.read.parquet(nodes_path(path))
+    lsm_rebuild(assign_codes(emb, planes), nodes_path(path), NODES)
     write_overwrite(
-        bucket_edges(stored, k), edges_path(path), partition_by=["code"]
+        bucket_edges(read_nodes(spark, path), k),
+        edges_path(path),
+        partition_by=["code"],
     )
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir),
-        "params": {"n_planes": n_planes, "k": k},
-        "planes": planes,
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    params = {"n_planes": n_planes, "k": k}
+    return GRAPH.commit(path, GRAPH.stamp(sf_dir, params, planes=planes))
 
 
 def ensure_knn_graph_index(
@@ -221,29 +197,20 @@ def ensure_knn_graph_index(
     n_planes: int = 6,
     k: int = 3,
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract):
-    keyed by corpus basename + optional variant (maintenance entries
-    mutate their OWN copy so the served read-only index never sees
+    """Build-if-absent-or-stale (operators/artifact.py): keyed by
+    corpus basename + optional variant (maintenance entries mutate
+    their OWN copy so the served read-only index never sees
     synthetic batches). Staleness = source fingerprint or params
     changed."""
-    root = root or GRAPH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
+    return GRAPH.ensure(
+        sf_dir,
+        {"n_planes": n_planes, "k": k},
+        lambda path: build_knn_graph_index(
+            spark, sf_dir, path, n_planes=n_planes, k=k
+        ),
+        root,
+        variant,
     )
-    path = os.path.join(root, f"knn_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir)
-    params = {"n_planes": n_planes, "k": k}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_knn_graph_index(spark, sf_dir, path, n_planes=n_planes, k=k)
-    return path, meta
 
 
 def read_edges(
@@ -261,24 +228,16 @@ def read_edges(
     return df.select("code", "src_id", "dst_id", "sim", "rank")
 
 
-NODES_DDL = "vec_id long, embedding array<double>, code int"
-# one source of truth: lsm_view's declared read schema AND the empty
-# fallback (r14 ADVICE)
-
-
 def read_nodes(
     spark: SparkSession, path: str, codes: list[int] | None = None
 ) -> DataFrame:
-    """Logical node set — the LSM view (plain base scan when the log
-    is empty); the code filter prunes base AND delta directories."""
-    df = lsm_view(
-        spark, nodes_path(path), "vec_id", schema=NODES_DDL
-    )
-    if df is None:
-        df = spark.createDataFrame([], NODES_DDL)
+    """Logical node set (vec_id, embedding, code) — the LSM view
+    (plain base scan when the log is empty); the code filter prunes
+    base AND delta directories."""
+    df = lsm_view(spark, nodes_path(path), NODES)
     if codes is not None:
         df = df.filter(F.col("code").isin([int(c) for c in codes]))
-    return df.select("vec_id", "embedding", "code")
+    return df
 
 
 def _affected_codes(coded: DataFrame) -> list[int]:
@@ -329,14 +288,14 @@ def graph_upsert(
         .distinct()
     )
     affected = sorted({int(r.code) for r in old.collect()} | set(batch_codes))
-    lsm_upsert(spark, nodes_path(path), coded, "vec_id", ["code"])
+    lsm_upsert(spark, nodes_path(path), NODES, coded)
     merged = read_nodes(spark, path, codes=affected)
     edges = bucket_edges(merged, k).localCheckpoint()
     write_upsert_partitions(edges, edges_path(path), ["code"])
     # a merged bucket can still produce zero edges (single-member
     # bucket) — its stale edge directory must not survive
     _drop_emptied(spark, edges_path(path), affected, edges)
-    lsm_maybe_compact(spark, nodes_path(path), "vec_id", ["code"])
+    lsm_maybe_compact(spark, nodes_path(path), NODES)
     return affected
 
 
@@ -370,12 +329,12 @@ def graph_delete(
     affected = sorted(
         {int(r.code) for r in stored.collect()} | set(_affected_codes(coded))
     )
-    lsm_delete(spark, nodes_path(path), coded.select("vec_id"), "vec_id")
+    lsm_delete(spark, nodes_path(path), NODES, coded.select("vec_id"))
     keep = read_nodes(spark, path, codes=affected)
     edges = bucket_edges(keep, k).localCheckpoint()
     write_upsert_partitions(edges, edges_path(path), ["code"])
     _drop_emptied(spark, edges_path(path), affected, edges)
-    lsm_maybe_compact(spark, nodes_path(path), "vec_id", ["code"])
+    lsm_maybe_compact(spark, nodes_path(path), NODES)
     return affected
 
 

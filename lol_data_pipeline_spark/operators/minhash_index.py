@@ -40,21 +40,12 @@ contract, dedup axis.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.caching import tracked_persist
-from lol_data_pipeline_spark.io import load_table, write_overwrite
-from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
-    lsm_view,
-)
+from lol_data_pipeline_spark.io import load_table
+from lol_data_pipeline_spark.operators.artifact import BUCKETS, MINHASH
 from lol_data_pipeline_spark.operators.dedup import (
     _affine_params,
     _doc_shingle_arrays,
@@ -64,36 +55,22 @@ from lol_data_pipeline_spark.operators.dedup import (
     md5_long,
     minhash_band_buckets,
 )
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from lol_data_pipeline_spark.operators.lsm import (
+    artifact_delete,
+    artifact_upsert,
+    lsm_commit,
+    lsm_rebuild,
+    lsm_view,
 )
-MINHASH_ROOT = os.environ.get(
-    "SPARK_GRAFT_MINHASH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "minhash_index"),
-)
-_META_NAME = "_minhash_meta.json"
 
-
-def buckets_path(path: str) -> str:
-    return os.path.join(path, "buckets")
-
-
-BUCKETS_DDL = "id long, bkey string, band int"  # one source of truth:
-# lsm_view's declared read schema AND the empty fallback (r14 ADVICE —
-# a drifting duplicate would silently null-fill instead of erroring)
+buckets_path = BUCKETS.dir
 
 
 def read_minhash_buckets(spark: SparkSession, path: str) -> DataFrame:
     """The artifact's logical (id, band, bkey) rows — the LSM view
     (plain base scan when the log is empty). Empty-with-schema when
     nothing is on disk, so probe-after-full-take-down works."""
-    view = lsm_view(
-        spark, buckets_path(path), "id", schema=BUCKETS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], BUCKETS_DDL)
-    return view.select("id", F.col("band").cast("int").alias("band"), "bkey")
+    return lsm_view(spark, buckets_path(path), BUCKETS).select("id", "band", "bkey")
 
 
 def _batch_buckets(docs: DataFrame, k: int, bands: int, n: int) -> DataFrame:
@@ -121,10 +98,6 @@ def build_minhash_index(
     bucket rows, bkey-sorted within files, + params/fingerprint
     sidecar. ``index_where`` (SQL over documents) selects the index
     side — '' means the whole corpus."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -133,22 +106,9 @@ def build_minhash_index(
         .repartition("band")
         .sortWithinPartitions("bkey")
     )
-    write_overwrite(buckets, buckets_path(path), partition_by=["band"])
-    lsm_reset(buckets_path(path))  # a rebuild starts a fresh generation
-    n_docs = (
-        spark.read.parquet(buckets_path(path))
-        .select("id")
-        .distinct()
-        .count()
-    )
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
-        "params": {"k": k, "bands": bands, "n": n, "index_where": index_where},
-        "n_docs": int(n_docs),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    lsm_rebuild(buckets, buckets_path(path), BUCKETS)
+    params = {"k": k, "bands": bands, "n": n, "index_where": index_where}
+    return lsm_commit(spark, MINHASH, path, MINHASH.stamp(sf_dir, params))
 
 
 def ensure_minhash_index(
@@ -161,33 +121,18 @@ def ensure_minhash_index(
     n: int = 3,
     index_where: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract),
-    keyed by corpus basename + optional variant; params + predicate
-    are part of the staleness check."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale (operators/artifact.py), keyed by
+    corpus basename + optional variant; params + predicate are part
+    of the staleness check."""
+    return MINHASH.ensure(
+        sf_dir,
+        {"k": k, "bands": bands, "n": n, "index_where": index_where},
+        lambda path: build_minhash_index(
+            spark, sf_dir, path, k=k, bands=bands, n=n, index_where=index_where
+        ),
+        root,
+        variant,
     )
-
-    root = root or MINHASH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"minhash_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {"k": k, "bands": bands, "n": n, "index_where": index_where}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_minhash_index(
-        spark, sf_dir, path, k=k, bands=bands, n=n, index_where=index_where
-    )
-    return path, meta
 
 
 def served_minhash_probe(
@@ -255,16 +200,7 @@ def minhash_index_upsert(
     Idempotent."""
     p = meta["params"]
     buckets = _batch_buckets(new_docs, p["k"], p["bands"], p["n"])
-    lsm_upsert(spark, buckets_path(path), buckets, "id", ["band"])
-    lsm_maybe_compact(
-        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
-    )
-    n_docs = read_minhash_buckets(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return artifact_upsert(spark, MINHASH, path, meta, [buckets])
 
 
 def minhash_index_delete(
@@ -273,17 +209,9 @@ def minhash_index_delete(
     """Take-down: tombstones only (write ∝ doomed ids) — the batch's
     bucket rows vanish from the VIEW immediately, from disk at the
     next compact; the sidecar count shrinks exactly. Idempotent."""
-    ids = doomed_ids.select(F.col("doc_id").alias("id")).distinct()
-    lsm_delete(spark, buckets_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
+    return artifact_delete(
+        spark, MINHASH, path, meta, doomed_ids.select(F.col("doc_id").alias("id"))
     )
-    n_docs = read_minhash_buckets(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
 
 
 def minhash_sql_ctes(

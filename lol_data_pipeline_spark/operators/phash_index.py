@@ -42,30 +42,21 @@ contract, image axis.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lol_data_pipeline_spark.io import load_table, write_overwrite
+from lol_data_pipeline_spark.io import load_table
+from lol_data_pipeline_spark.operators.artifact import BANDS, PHASH
 from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
+    artifact_delete,
+    artifact_upsert,
+    lsm_commit,
+    lsm_compact,
+    lsm_rebuild,
     lsm_view,
 )
 from lol_data_pipeline_spark.operators.multimodal import media_dhash_frame
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-PHASH_ROOT = os.environ.get(
-    "SPARK_GRAFT_PHASH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "phash_index"),
-)
-_META_NAME = "_phash_meta.json"
 BITS = 64
 MAX_HAMMING = 3
 N_BANDS = MAX_HAMMING + 1  # pigeonhole: d<=3 shares >=1 of 4 bands
@@ -73,8 +64,7 @@ _WIDTH = BITS // N_BANDS
 _MASK = (1 << _WIDTH) - 1
 
 
-def bands_path(path: str) -> str:
-    return os.path.join(path, "bands")
+bands_path = BANDS.dir
 
 
 def _batch_band_rows(media: DataFrame, signer: str = "image") -> DataFrame:
@@ -105,22 +95,14 @@ def _batch_band_rows(media: DataFrame, signer: str = "image") -> DataFrame:
     ).select("id", "simhash", F.col("bk.band").alias("band"), F.col("bk.chunk").alias("chunk"))
 
 
-BANDS_DDL = "id long, simhash long, chunk long, band int"
-# one source of truth: lsm_view's declared read schema AND the empty
-# fallback (r14 ADVICE)
-
-
 def read_phash_rows(spark: SparkSession, path: str) -> DataFrame:
     """The artifact's logical (id, simhash, band, chunk) rows — the
     LSM view (plain base scan when the log is empty, so the serve
     plan is unchanged from the pre-LSM design). Empty-with-schema
     when nothing is on disk, so probe-after-full-take-down works."""
-    view = lsm_view(
-        spark, bands_path(path), "id", schema=BANDS_DDL
+    return lsm_view(spark, bands_path(path), BANDS).select(
+        "id", "simhash", "band", "chunk"
     )
-    if view is None:
-        view = spark.createDataFrame([], BANDS_DDL)
-    return view.select("id", "simhash", "band", "chunk")
 
 
 def _base_media(docs: DataFrame) -> DataFrame:
@@ -149,6 +131,22 @@ def frame_media(docs: DataFrame, frames: list[int]) -> DataFrame:
     )
 
 
+def _phash_params(index_where: str, frames: list[int] | None, signer: str) -> dict:
+    params = {
+        "bits": BITS,
+        "max_hamming": MAX_HAMMING,
+        "bands": N_BANDS,
+        "index_where": index_where,
+    }
+    if frames:
+        # only present in frame mode, so image-mode sidecars written
+        # before the video axis existed stay valid
+        params["frames"] = [int(f) for f in frames]
+    if signer != "image":
+        params["signer"] = signer  # same back-compat rule
+    return params
+
+
 def build_phash_index(
     spark: SparkSession,
     sf_dir: str,
@@ -162,10 +160,6 @@ def build_phash_index(
     sidecar. ``frames``: index per-clip sampled FRAMES instead of
     one image per doc (the video axis — frame_media). ``signer``:
     the modality kernel (image dHash / audio energy hash)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     if index_where:
         docs = docs.filter(F.expr(index_where))
@@ -175,30 +169,9 @@ def build_phash_index(
         .repartition("band")
         .sortWithinPartitions("chunk")
     )
-    write_overwrite(rows, bands_path(path), partition_by=["band"])
-    lsm_reset(bands_path(path))  # a rebuild starts a fresh generation
-    disk = spark.read.parquet(bands_path(path))
-    n_docs = disk.select("id").distinct().count()
-    params = {
-        "bits": BITS,
-        "max_hamming": MAX_HAMMING,
-        "bands": N_BANDS,
-        "index_where": index_where,
-    }
-    if frames:
-        # only present in frame mode, so image-mode sidecars written
-        # before the video axis existed stay valid
-        params["frames"] = [int(f) for f in frames]
-    if signer != "image":
-        params["signer"] = signer  # same back-compat rule
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
-        "params": params,
-        "n_docs": int(n_docs),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    lsm_rebuild(rows, bands_path(path), BANDS)
+    params = _phash_params(index_where, frames, signer)
+    return lsm_commit(spark, PHASH, path, PHASH.stamp(sf_dir, params))
 
 
 def ensure_phash_index(
@@ -210,43 +183,19 @@ def ensure_phash_index(
     frames: list[int] | None = None,
     signer: str = "image",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the ensure_* contract); ``frames``
+    """Build-if-absent-or-stale (operators/artifact.py); ``frames``
     selects the video-frame axis and ``signer`` the modality kernel
     (both part of the staleness key)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    return PHASH.ensure(
+        sf_dir,
+        _phash_params(index_where, frames, signer),
+        lambda path: build_phash_index(
+            spark, sf_dir, path, index_where=index_where, frames=frames,
+            signer=signer,
+        ),
+        root,
+        variant,
     )
-
-    root = root or PHASH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"phash_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    want_params = {
-        "bits": BITS,
-        "max_hamming": MAX_HAMMING,
-        "bands": N_BANDS,
-        "index_where": index_where,
-    }
-    if frames:
-        want_params["frames"] = [int(f) for f in frames]
-    if signer != "image":
-        want_params["signer"] = signer
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_phash_index(
-        spark, sf_dir, path, index_where=index_where, frames=frames,
-        signer=signer,
-    )
-    return path, meta
 
 
 def served_phash_pairs(
@@ -296,16 +245,7 @@ def phash_index_upsert(
     rows = _batch_band_rows(
         new_media, signer=meta["params"].get("signer", "image")
     )
-    lsm_upsert(spark, bands_path(path), rows, "id", ["band"])
-    lsm_maybe_compact(
-        spark, bands_path(path), "id", ["band"], sort_within=["chunk"]
-    )
-    n_docs = read_phash_rows(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return artifact_upsert(spark, PHASH, path, meta, [rows])
 
 
 def phash_index_delete(
@@ -314,24 +254,14 @@ def phash_index_delete(
     """Take-down: tombstones only (write ∝ doomed ids); the batch's
     rows vanish from the VIEW immediately and from disk at the next
     compact; the sidecar count shrinks exactly. Idempotent."""
-    ids = doomed_ids.select(F.col("media_id").alias("id")).distinct()
-    lsm_delete(spark, bands_path(path), ids, "id")
-    lsm_maybe_compact(
-        spark, bands_path(path), "id", ["band"], sort_within=["chunk"]
+    return artifact_delete(
+        spark, PHASH, path, meta, doomed_ids.select(F.col("media_id").alias("id"))
     )
-    n_docs = read_phash_rows(spark, path).select("id").distinct().count()
-    meta = dict(meta)
-    meta["n_docs"] = int(n_docs)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
 
 
 def phash_index_compact(spark: SparkSession, path: str, meta: dict) -> dict:
     """Force the fold (the maintenance entry's explicit form of the
     quota trigger): view → fresh chunk-sorted base, logs cleared.
     The view — and therefore every probe — is unchanged."""
-    from lol_data_pipeline_spark.operators.lsm import lsm_compact
-
-    lsm_compact(spark, bands_path(path), "id", ["band"], sort_within=["chunk"])
+    lsm_compact(spark, bands_path(path), BANDS)
     return meta

@@ -31,7 +31,6 @@ contract, mergeable-aggregate axis.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -43,15 +42,7 @@ from lol_data_pipeline_spark.io import (
     write_overwrite,
     write_upsert_partitions,
 )
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-SKETCH_ROOT = os.environ.get(
-    "SPARK_GRAFT_SKETCH_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "sketch_index"),
-)
-_META_NAME = "_sketch_meta.json"
+from lol_data_pipeline_spark.operators.artifact import HLL
 
 
 def regs_path(path: str) -> str:
@@ -67,14 +58,15 @@ def _day_regs(ev: DataFrame) -> DataFrame:
     return hll_day_registers(ev)
 
 
+def _hll_params() -> dict:
+    from lol_data_pipeline_spark.plans.sketches import _HLL_M, _HLL_P
+
+    return {"p": _HLL_P, "m": _HLL_M}
+
+
 def build_hll_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
     """One distinct-pass over events → day-partitioned registers +
     sidecar (HLL params, counts, source fingerprint)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-    from lol_data_pipeline_spark.plans.sketches import _HLL_M, _HLL_P
-
     ev = load_table(spark, sf_dir, "events")
     regs = _day_regs(ev).repartition("day").sortWithinPartitions("idx")
     write_overwrite(regs, regs_path(path), partition_by=["day"])
@@ -82,15 +74,15 @@ def build_hll_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
     agg = disk.agg(
         F.count("*").alias("n_rows"), F.countDistinct("day").alias("n_days")
     ).collect()[0]
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="events"),
-        "params": {"p": _HLL_P, "m": _HLL_M},
-        "n_days": int(agg.n_days),
-        "n_rows": int(agg.n_rows),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return HLL.commit(
+        path,
+        HLL.stamp(
+            sf_dir,
+            _hll_params(),
+            n_days=int(agg.n_days),
+            n_rows=int(agg.n_rows),
+        ),
+    )
 
 
 def ensure_hll_index(
@@ -99,30 +91,14 @@ def ensure_hll_index(
     root: str | None = None,
     variant: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract)."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale (operators/artifact.py)."""
+    return HLL.ensure(
+        sf_dir,
+        _hll_params(),
+        lambda path: build_hll_index(spark, sf_dir, path),
+        root,
+        variant,
     )
-    from lol_data_pipeline_spark.plans.sketches import _HLL_M, _HLL_P
-
-    root = root or SKETCH_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"hll_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="events")
-    want_params = {"p": _HLL_P, "m": _HLL_M}
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == want_params:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_hll_index(spark, sf_dir, path)
-    return path, meta
 
 
 def served_hll_rolling(spark: SparkSession, path: str) -> DataFrame:
@@ -169,9 +145,7 @@ def hll_index_upsert(
     ).collect()[0]
     meta = dict(meta)
     meta["n_days"], meta["n_rows"] = int(agg.n_days), int(agg.n_rows)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return HLL.commit(path, meta)
 
 
 def hll_index_retention_drop(
@@ -201,6 +175,4 @@ def hll_index_retention_drop(
             F.countDistinct("day").alias("n_days"),
         ).collect()[0]
         meta["n_days"], meta["n_rows"] = int(agg.n_days), int(agg.n_rows)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return HLL.commit(path, meta)

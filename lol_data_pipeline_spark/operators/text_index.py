@@ -49,33 +49,24 @@ serve-many contract, lexical axis.
 
 from __future__ import annotations
 
-import json
-import os
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lol_data_pipeline_spark.functions.text import tokens
-from lol_data_pipeline_spark.io import load_table, widen, write_overwrite
+from lol_data_pipeline_spark.io import load_table, widen
+from lol_data_pipeline_spark.operators.artifact import BM25, DOCLENS, POSTINGS
 from lol_data_pipeline_spark.operators.lsm import (
-    lsm_delete,
-    lsm_maybe_compact,
-    lsm_reset,
-    lsm_upsert,
+    artifact_delete,
+    artifact_upsert,
+    lsm_commit,
+    lsm_rebuild,
     lsm_view,
 )
 from lol_data_pipeline_spark.operators.relational import global_topk_ranked
 from lol_data_pipeline_spark.operators.search import bm25_weight_sql
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-TEXT_ROOT = os.environ.get(
-    "SPARK_GRAFT_TEXT_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "text_index"),
-)
-_META_NAME = "_text_meta.json"
 _NB = 16  # term/doc bucket count
 
 
@@ -86,43 +77,21 @@ def term_bucket(term: str) -> int:
     return zlib.crc32(term.encode("utf-8")) % _NB
 
 
-def postings_path(path: str) -> str:
-    return os.path.join(path, "postings")
-
-
-def doclens_path(path: str) -> str:
-    return os.path.join(path, "doclens")
-
-
-POSTINGS_DDL = "doc_id long, term string, tf long, tb int"
-DOCLENS_DDL = "doc_id long, dl long, db int"
-# one source of truth per table: lsm_view's declared read schema AND
-# the empty fallback (r14 ADVICE)
+postings_path = POSTINGS.dir
+doclens_path = DOCLENS.dir
 
 
 def read_postings(spark: SparkSession, path: str) -> DataFrame:
     """The postings table's logical (doc_id, term, tf, tb) rows — the
-    LSM view (plain base scan when the log is empty). Empty-with-
-    schema when nothing is on disk."""
-    view = lsm_view(
-        spark, postings_path(path), "doc_id", schema=POSTINGS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], POSTINGS_DDL)
-    return view.select(
-        "doc_id", "term", "tf", F.col("tb").cast("int").alias("tb")
-    )
+    LSM view (plain base scan when the log is empty; empty-with-
+    schema when nothing is on disk)."""
+    return lsm_view(spark, postings_path(path), POSTINGS)
 
 
 def read_doclens(spark: SparkSession, path: str) -> DataFrame:
     """The doc-length table's logical (doc_id, dl, db) rows — same
     contract as read_postings."""
-    view = lsm_view(
-        spark, doclens_path(path), "doc_id", schema=DOCLENS_DDL
-    )
-    if view is None:
-        view = spark.createDataFrame([], DOCLENS_DDL)
-    return view.select("doc_id", "dl", F.col("db").cast("int").alias("db"))
+    return lsm_view(spark, doclens_path(path), DOCLENS)
 
 
 def _postings_and_lens(
@@ -151,33 +120,10 @@ def build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
     """ONE tokenize pass → postings + doclens + exact-integer stats
     sidecar. The build materializes the FULL vocabulary's postings —
     the one-time cost every probe afterwards avoids."""
-    docs = load_table(spark, sf_dir, "documents")
-    postings, lens = _postings_and_lens(docs)
-    write_overwrite(postings, postings_path(path), partition_by=["tb"])
-    write_overwrite(lens, doclens_path(path), partition_by=["db"])
-    lsm_reset(postings_path(path))  # a rebuild starts a fresh generation
-    lsm_reset(doclens_path(path))
-    row = (
-        spark.read.parquet(doclens_path(path))
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("dl").cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
-    )
-
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir, table="documents"),
-        "params": {"nb": _NB},
-        "n_docs": int(row.n),
-        "total_tokens": int(row.tot),
-    }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    postings, lens = _postings_and_lens(load_table(spark, sf_dir, "documents"))
+    lsm_rebuild(postings, postings_path(path), POSTINGS)
+    lsm_rebuild(lens, doclens_path(path), DOCLENS)
+    return lsm_commit(spark, BM25, path, BM25.stamp(sf_dir, {"nb": _NB}))
 
 
 def ensure_bm25_index(
@@ -186,31 +132,15 @@ def ensure_bm25_index(
     root: str | None = None,
     variant: str = "",
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale (the vector_index.ensure_* contract),
-    keyed by corpus basename + optional variant."""
-    from lol_data_pipeline_spark.operators.vector_index import (
-        _source_fingerprint,
+    """Build-if-absent-or-stale (operators/artifact.py), keyed by
+    corpus basename + optional variant."""
+    return BM25.ensure(
+        sf_dir,
+        {"nb": _NB},
+        lambda path: build_bm25_index(spark, sf_dir, path),
+        root,
+        variant,
     )
-
-    root = root or TEXT_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"bm25_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir, table="documents")
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == {
-            "nb": _NB
-        }:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    os.makedirs(path, exist_ok=True)
-    meta = build_bm25_index(spark, sf_dir, path)
-    return path, meta
 
 
 def served_bm25_topk(
@@ -284,32 +214,10 @@ def bm25_index_upsert(
     including ones in buckets the new text never touches — are
     superseded by the tombstone at read time, which retires the old
     second chase-the-unaffected-buckets pass), and the sidecar's
-    EXACT integer totals update. Older rows physically drop at the
-    quota-triggered compact. Idempotent. Returns the updated meta."""
-    postings, lens = _postings_and_lens(new_docs)
-    lsm_upsert(spark, postings_path(path), postings, "doc_id", ["tb"])
-    lsm_upsert(spark, doclens_path(path), lens, "doc_id", ["db"])
-    lsm_maybe_compact(
-        spark, postings_path(path), "doc_id", ["tb"], sort_within=["term"]
-    )
-    lsm_maybe_compact(spark, doclens_path(path), "doc_id", ["db"])
-    # exact totals from the post-write doclens view (one column-pruned
-    # aggregate — the same read the old incremental arithmetic needed
-    # to find replaced docs' lengths)
-    row = (
-        read_doclens(spark, path)
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    meta = dict(meta)
-    meta["n_docs"] = int(row.n)
-    meta["total_tokens"] = int(row.tot)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    EXACT integer totals are recounted from the post-write doclens
+    view. Older rows physically drop at the quota-triggered compact.
+    Idempotent. Returns the updated meta."""
+    return artifact_upsert(spark, BM25, path, meta, _postings_and_lens(new_docs))
 
 
 def bm25_index_delete(
@@ -319,24 +227,4 @@ def bm25_index_delete(
     ids) — the docs' postings and lengths vanish from the VIEW
     immediately, from disk at the next compact; the sidecar's EXACT
     integer totals shrink. Idempotent."""
-    ids = doomed_ids.select("doc_id")
-    lsm_delete(spark, postings_path(path), ids, "doc_id")
-    lsm_delete(spark, doclens_path(path), ids, "doc_id")
-    lsm_maybe_compact(
-        spark, postings_path(path), "doc_id", ["tb"], sort_within=["term"]
-    )
-    lsm_maybe_compact(spark, doclens_path(path), "doc_id", ["db"])
-    row = (
-        read_doclens(spark, path)
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tot"),
-        )
-        .collect()[0]
-    )
-    meta = dict(meta)
-    meta["n_docs"] = int(row.n)
-    meta["total_tokens"] = int(row.tot)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return artifact_delete(spark, BM25, path, meta, doomed_ids.select("doc_id"))

@@ -52,14 +52,17 @@ build-once/serve-many contract applied to the vector-index family.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lol_data_pipeline_spark.io import table_path, write_upsert_partitions, write_overwrite
+from lol_data_pipeline_spark.io import (
+    load_table,
+    write_overwrite,
+    write_upsert_partitions,
+)
+from lol_data_pipeline_spark.operators.artifact import IVFPQ
 from lol_data_pipeline_spark.operators.clustering import _cc, kmeans_cells, kmeans_train
 from lol_data_pipeline_spark.operators.similarity import (
     _arr_sql,
@@ -68,16 +71,6 @@ from lol_data_pipeline_spark.operators.similarity import (
     dot,
     pq_encode,
 )
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-INDEX_ROOT = os.environ.get(
-    "SPARK_GRAFT_INDEX_DIR",
-    os.path.join(_REPO_ROOT, "spark-warehouse", "vector_index"),
-)
-_META_NAME = "_index_meta.json"
-
 
 def pq_code_cols(m: int) -> list[str]:
     return [f"code{s}" for s in range(m)]
@@ -144,31 +137,6 @@ def ivf_probe_rows(
     )
 
 
-def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Content fingerprint of the source table's files (name, size,
-    mtime_ns) — cheap staleness detection: a regenerated corpus gets
-    a rebuilt index, not stale cells.
-
-    Deployment posture (r12 verdict): file metadata is the right key
-    LOCALLY, but at cluster scale a source table lives behind a
-    catalog — substitute the table's manifest/snapshot version
-    (Iceberg snapshot-id, Delta table version, Hive partition
-    transient_lastDdlTime) for the os.walk here. The ensure_*
-    contract is unchanged: compare the stored key, rebuild on
-    mismatch; only the key's provenance moves."""
-    p = table_path(sf_dir, table)
-    stats: list[tuple[str, int, int]] = []
-    if os.path.isdir(p):
-        for root, _dirs, files in os.walk(p):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                stats.append((f, st.st_size, st.st_mtime_ns))
-    else:
-        st = os.stat(p)
-        stats.append((os.path.basename(p), st.st_size, st.st_mtime_ns))
-    return hashlib.md5(repr(sorted(stats)).encode()).hexdigest()
-
-
 def auto_cells(n: int, lo: int = 8) -> int:
     """The k ∝ √N IVF sizing rule (SCALE.md), as CODE: the smallest
     power of two k with k² ≥ n, clamped below at ``lo``. Exact
@@ -203,8 +171,6 @@ def build_ivfpq_index(
     sample; the single full-corpus pass is assignment+encode, both
     pure projections against literal centroids. Returns the sidecar
     metadata dict."""
-    from lol_data_pipeline_spark.io import load_table
-
     emb = load_table(spark, sf_dir, "embeddings")
     if k is None:
         # auto-size from the corpus: k ∝ √N (registry entries pin an
@@ -236,23 +202,24 @@ def build_ivfpq_index(
         emit="codes",
     )
     write_overwrite(codes, path, partition_by=["cell_id"])
-    meta = {
-        "fingerprint": _source_fingerprint(sf_dir),
-        "params": {
-            "k": k,
-            "rounds": rounds,
-            "m": m,
-            "dsub": dsub,
-            "ncent": ncent,
-            "sample_mod": sample_mod,
-            "dim": dim,
-        },
-        "cents": [[cid, cv] for cid, cv in cents],
-        "seeds": seeds,
+    params = {
+        "k": k,
+        "rounds": rounds,
+        "m": m,
+        "dsub": dsub,
+        "ncent": ncent,
+        "sample_mod": sample_mod,
+        "dim": dim,
     }
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return IVFPQ.commit(
+        path,
+        IVFPQ.stamp(
+            sf_dir,
+            params,
+            cents=[[cid, cv] for cid, cv in cents],
+            seeds=seeds,
+        ),
+    )
 
 
 def ensure_ivfpq_index(
@@ -262,19 +229,12 @@ def ensure_ivfpq_index(
     variant: str = "",
     **params,
 ) -> tuple[str, dict]:
-    """Build-if-absent-or-stale: returns (path, sidecar meta). The
-    index is keyed by the sf_dir basename (one index per corpus) and
-    an optional ``variant`` suffix (e.g. the upsert entry maintains
-    its OWN copy so its synthetic batch never leaks into the served
-    read-only index). Staleness = source fingerprint or build params
-    changed."""
-    root = root or INDEX_ROOT
-    name = os.path.basename(os.path.normpath(sf_dir)) + (
-        f"_{variant}" if variant else ""
-    )
-    path = os.path.join(root, f"ivfpq_{name}")
-    meta_path = os.path.join(path, _META_NAME)
-    want_fp = _source_fingerprint(sf_dir)
+    """Build-if-absent-or-stale (operators/artifact.py): returns
+    (path, sidecar meta). The index is keyed by the sf_dir basename
+    (one index per corpus) and an optional ``variant`` suffix (e.g.
+    the upsert entry maintains its OWN copy so its synthetic batch
+    never leaks into the served read-only index). Staleness = source
+    fingerprint or build params changed."""
     defaults = dict(
         k=8, rounds=5, m=8, dsub=8, ncent=16, sample_mod=4, dim=64
     )
@@ -285,20 +245,16 @@ def ensure_ivfpq_index(
         # SPARK_GRAFT_IVF_AUTOK force-overrides pinned k — scale-probe
         # use ONLY (tools/scale_probe.py): the unrolled SQL oracles
         # assume the pinned k, so parity checks must run without it.
-        from lol_data_pipeline_spark.io import load_table
-
         defaults["k"] = auto_cells(
             load_table(spark, sf_dir, "embeddings").count()
         )
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("fingerprint") == want_fp and meta.get("params") == defaults:
-            return path, meta
-    except (OSError, ValueError):
-        pass
-    meta = build_ivfpq_index(spark, sf_dir, path, **defaults)
-    return path, meta
+    return IVFPQ.ensure(
+        sf_dir,
+        defaults,
+        lambda path: build_ivfpq_index(spark, sf_dir, path, **defaults),
+        root,
+        variant,
+    )
 
 
 def read_index_codes(
@@ -340,8 +296,6 @@ def served_ivfpq_topk(
     The probed-cell collect is bounded by the CODEBOOK size (≤ k
     distinct cells exist no matter how many queries probe), so the
     literal partition filter stays constant-size at any scale."""
-    from lol_data_pipeline_spark.io import load_table
-
     path, meta = ensure_ivfpq_index(spark, sf_dir, root=index_root)
     cents = [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
     p = meta["params"]
@@ -656,8 +610,6 @@ def served_ivfpq_topk_multi(
     windows see exactly the same inputs in the same order.
 
     Returns (nprobe, query_id, match_id, probe_rank, sim, rank)."""
-    from lol_data_pipeline_spark.io import load_table
-
     path, meta = ensure_ivfpq_index(spark, sf_dir, root=index_root)
     cents = [(int(c), [float(v) for v in cv]) for c, cv in meta["cents"]]
     p = meta["params"]

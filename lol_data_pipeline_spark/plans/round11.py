@@ -2181,9 +2181,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
     verified is the SERVE path over the post-stream artifact against
     an oracle recomputing BM25 over corpus∪batch from scratch. Own
     index copy (variant="streamup")."""
-    import json as _json
-    import os as _os
-
+    from lol_data_pipeline_spark.operators.artifact import BM25
     from lol_data_pipeline_spark.operators.text_index import (
         bm25_index_upsert,
         ensure_bm25_index,
@@ -2207,9 +2205,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
     def sink(df, _epoch_id):
         # current sidecar, not the closure's snapshot — each epoch's
         # exact totals build on the previous epoch's writes
-        with open(_os.path.join(path, "_text_meta.json")) as f:
-            m = _json.load(f)
-        bm25_index_upsert(spark, path, m, df)
+        bm25_index_upsert(spark, path, BM25.read(path), df)
 
     replay_multibatch(
         spark,
@@ -2219,8 +2215,7 @@ def stream_bm25_upsert_multibatch(spark, sf_dir):
         key=f"bm25_upsert:{sf_dir}",
         foreach_batch=sink,
     )
-    with open(_os.path.join(path, "_text_meta.json")) as f:
-        meta = _json.load(f)
+    meta = BM25.read(path)
     return served_bm25_topk(
         spark, path, meta, _BM25_TERMS, k=_BM25_K, k1=_BM25_K1, b=_BM25_B
     )

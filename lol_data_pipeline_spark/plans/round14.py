@@ -627,6 +627,7 @@ def chunk_index_compact_entry(spark, sf_dir):
         ensure_chunk_index,
         served_chunk_clean,
     )
+    from lol_data_pipeline_spark.operators.artifact import CHUNKS
     from lol_data_pipeline_spark.operators.lsm import lsm_compact, lsm_epochs
     from lol_data_pipeline_spark.plans.round12 import (
         _CHUP_HI,
@@ -644,7 +645,7 @@ def chunk_index_compact_entry(spark, sf_dir):
         F.col("doc_id").between(_CHUP_LO, _CHUP_HI - 1)
     ).select((F.col("doc_id") + _CHUP_SHIFT).alias("doc_id"), "text")
     meta = chunk_index_upsert(spark, path, meta, batch)
-    lsm_compact(spark, chunks_path(path), "id", ["hb"], sort_within=["h"])
+    lsm_compact(spark, chunks_path(path), CHUNKS)
     assert lsm_epochs(chunks_path(path)) == []
     probe = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
     return served_chunk_clean(spark, path, meta, probe)

@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from lol_data_pipeline_spark.operators.artifact import NGRAMS
 from lol_data_pipeline_spark.operators.lsm import (
     delta_path,
     dir_bytes,
@@ -141,7 +142,7 @@ def test_compact_preserves_view_and_clears_log(spark, tmp_path):
     base = chunks_path(path)
     assert lsm_epochs(base)
     before = sorted(map(tuple, read_ngram_rows(spark, path).collect()))
-    assert lsm_compact(spark, base, "id", ["hb"], sort_within=["h"])
+    assert lsm_compact(spark, base, NGRAMS)
     assert lsm_epochs(base) == []
     after = sorted(map(tuple, read_ngram_rows(spark, path).collect()))
     assert after == before
@@ -168,7 +169,7 @@ def test_upsert_after_full_delete_and_empty_compact(spark, tmp_path):
     assert meta["n_docs"] == 0 and meta["n_grams"] == 0
     assert read_ngram_rows(spark, path).count() == 0
     base = chunks_path(path)
-    lsm_compact(spark, base, "id", ["hb"], sort_within=["h"])
+    lsm_compact(spark, base, NGRAMS)
     assert read_ngram_rows(spark, path).count() == 0  # schema survives
     b = _batch(spark, n=2)
     meta = ngram_index_upsert(spark, path, meta, b)
@@ -189,7 +190,7 @@ def test_quota_trigger_folds_at_threshold(spark, tmp_path):
     path, meta = _build_ngram(spark, tmp_path, "ng_quota", "doc_id % 16 = 0")
     base = chunks_path(path)
     meta = ngram_index_upsert(spark, path, meta, _batch(spark, n=2))
-    assert not lsm_maybe_compact(spark, base, "id", ["hb"], quota=5)
+    assert not lsm_maybe_compact(spark, base, NGRAMS, quota=5)
     assert lsm_epochs(base)
-    assert lsm_maybe_compact(spark, base, "id", ["hb"], quota=1)
+    assert lsm_maybe_compact(spark, base, NGRAMS, quota=1)
     assert lsm_epochs(base) == []

@@ -256,9 +256,10 @@ def test_graph_delete_promotes_survivors_and_drops_emptied(
     # (r14 LSM shape) and their directory drops at the compact
     assert not os.path.isdir(os.path.join(path, "edges", f"code={victim}"))
     assert read_nodes(spark, path, codes=[victim]).count() == 0
+    from lol_data_pipeline_spark.operators.artifact import NODES
     from lol_data_pipeline_spark.operators.lsm import lsm_compact
 
-    lsm_compact(spark, os.path.join(path, "nodes"), "vec_id", ["code"])
+    lsm_compact(spark, os.path.join(path, "nodes"), NODES)
     assert not os.path.isdir(os.path.join(path, "nodes", f"code={victim}"))
 
 

@@ -26,6 +26,7 @@ def test_chunk_delete_drops_emptied_buckets(spark, tmp_path):
         chunks_path,
         read_chunk_rows,
     )
+    from lol_data_pipeline_spark.operators.artifact import CHUNKS
     from lol_data_pipeline_spark.operators.lsm import lsm_compact
 
     path = str(tmp_path / "chunk")
@@ -51,7 +52,7 @@ def test_chunk_delete_drops_emptied_buckets(spark, tmp_path):
     assert post.filter("id = 1").count() == 0, "stale doomed rows in view"
     assert meta["n_docs"] == 2
     assert meta["n_chunks"] == post.count()
-    lsm_compact(spark, chunks_path(path), "id", ["hb"], sort_within=["h"])
+    lsm_compact(spark, chunks_path(path), CHUNKS)
     for hb in exclusive:
         assert not os.path.isdir(
             os.path.join(chunks_path(path), f"hb={hb}")
@@ -70,6 +71,7 @@ def test_chunk_delete_everything_zeroes_sidecar(spark, tmp_path):
         chunks_path,
         read_chunk_rows,
     )
+    from lol_data_pipeline_spark.operators.artifact import CHUNKS
     from lol_data_pipeline_spark.operators.lsm import lsm_compact
 
     path = str(tmp_path / "chunk_all")
@@ -82,7 +84,7 @@ def test_chunk_delete_everything_zeroes_sidecar(spark, tmp_path):
     meta = chunk_index_delete(spark, path, meta, doomed)
     assert meta["n_docs"] == 0 and meta["n_chunks"] == 0
     assert read_chunk_rows(spark, path).count() == 0
-    lsm_compact(spark, chunks_path(path), "id", ["hb"], sort_within=["h"])
+    lsm_compact(spark, chunks_path(path), CHUNKS)
     leftover = [
         d for d in os.listdir(chunks_path(path)) if d.startswith("hb=")
     ]
@@ -96,6 +98,7 @@ def test_minhash_delete_drops_emptied_bands(spark, tmp_path):
     standing set empties EVERY band partition: the view and sidecar
     hit zero immediately, and the compact drops the directories —
     without crashing any later read."""
+    from lol_data_pipeline_spark.operators.artifact import BUCKETS
     from lol_data_pipeline_spark.operators.lsm import lsm_compact
     from lol_data_pipeline_spark.operators.minhash_index import (
         build_minhash_index,
@@ -115,9 +118,7 @@ def test_minhash_delete_drops_emptied_bands(spark, tmp_path):
     meta = minhash_index_delete(spark, path, meta, doomed)
     assert meta["n_docs"] == 0
     assert read_minhash_buckets(spark, path).count() == 0
-    lsm_compact(
-        spark, buckets_path(path), "id", ["band"], sort_within=["bkey"]
-    )
+    lsm_compact(spark, buckets_path(path), BUCKETS)
     leftover = [
         d for d in os.listdir(buckets_path(path)) if d.startswith("band=")
     ]

@@ -35,6 +35,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from lol_data_pipeline_spark.io import load_table  # noqa: E402
+from lol_data_pipeline_spark.operators.artifact import (  # noqa: E402
+    BANDS,
+    CHUNKS,
+    NGRAMS,
+)
 from lol_data_pipeline_spark.operators.lsm import (  # noqa: E402
     delta_path,
     dir_bytes,
@@ -100,8 +105,7 @@ def probe_family(spark, family: str, sf_dir: str, scale: str, batch) -> list[dic
         t0 = time.perf_counter()
         meta = build_chunk_index(spark, sf_dir, work, c=8)
         t_build = time.perf_counter() - t0
-        base_dir, upsert = chunks_path(work), chunk_index_upsert
-        part, sort = ["hb"], ["h"]
+        base_dir, upsert, table = chunks_path(work), chunk_index_upsert, CHUNKS
     elif family == "ngram":
         from lol_data_pipeline_spark.operators.chunk_index import (
             build_ngram_index,
@@ -112,8 +116,7 @@ def probe_family(spark, family: str, sf_dir: str, scale: str, batch) -> list[dic
         t0 = time.perf_counter()
         meta = build_ngram_index(spark, sf_dir, work, n=5)
         t_build = time.perf_counter() - t0
-        base_dir, upsert = chunks_path(work), ngram_index_upsert
-        part, sort = ["hb"], ["h"]
+        base_dir, upsert, table = chunks_path(work), ngram_index_upsert, NGRAMS
     else:  # phash
         from lol_data_pipeline_spark.operators.phash_index import (
             bands_path,
@@ -124,8 +127,7 @@ def probe_family(spark, family: str, sf_dir: str, scale: str, batch) -> list[dic
         t0 = time.perf_counter()
         meta = build_phash_index(spark, sf_dir, work)
         t_build = time.perf_counter() - t0
-        base_dir, upsert = bands_path(work), phash_index_upsert
-        part, sort = ["band"], ["chunk"]
+        base_dir, upsert, table = bands_path(work), phash_index_upsert, BANDS
         batch = batch.select(
             F.col("doc_id").alias("media_id"),
             (F.col("doc_id") - 77_000_000).alias("src"),
@@ -140,7 +142,7 @@ def probe_family(spark, family: str, sf_dir: str, scale: str, batch) -> list[dic
     touched = len(before ^ (_file_set(base_dir) & before))
     wrote = dir_bytes(delta_path(base_dir)) + dir_bytes(tomb_path(base_dir))
     t0 = time.perf_counter()
-    lsm_compact(spark, base_dir, "id", part, sort_within=sort)
+    lsm_compact(spark, base_dir, table)
     t_compact = time.perf_counter() - t0
     rows = [
         {

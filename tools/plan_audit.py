@@ -349,7 +349,7 @@ def has_unbounded_broadcast(logical_plan: str) -> bool:
 # Parquet schema inference launches a footer-read job per
 # spark.read.parquet call (~75 ms measured, r14) and the serve paths
 # re-read their artifacts on every probe, so every HOT read goes
-# through a declared-schema reader (lsm_view(schema=...),
+# through a declared-schema reader (lsm_view's table spec,
 # read_index_codes, io.load_table's memo). This rule keeps that
 # structural: any NEW bare .read.parquet() in the engine package must
 # either get a declared schema or be added here with a reason.
@@ -361,14 +361,6 @@ BARE_READ_OK = {
     "io.py:table_schema",  # the schema MEMO's cold path — inference
     # runs once per (table, file generation), then every read declares
     "io.py:compact_parquet",  # maintenance rewrite, once per compact
-    "operators/lsm.py:lsm_view",  # the schema=None fallback branch;
-    # every family caller passes its declared DDL
-    "operators/minhash_index.py:build_minhash_index",  # build-once
-    "operators/graph_index.py:build_knn_graph_index",  # build-once
-    "operators/chunk_index.py:build_chunk_index",  # build-once
-    "operators/chunk_index.py:build_ngram_index",  # build-once
-    "operators/phash_index.py:build_phash_index",  # build-once
-    "operators/text_index.py:build_bm25_index",  # build-once
     "operators/sketch_index.py:build_hll_index",  # build-once
     "operators/sketch_index.py:hll_index_upsert",  # maintenance merge
     # over the register partitions it rewrites (write-staging entry)
